@@ -63,8 +63,6 @@ ARROW_MAX_BYTES_PER_BATCH = 32 * 1024 * 1024
 
 # --- scale knobs ------------------------------------------------------------
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# salt buckets for decode-cost balancing of media-heavy partitions
-COST_SALT_BUCKETS = 32
 # target decode bytes per task for the media stage
 TARGET_BYTES_PER_TASK = 64 * 1024 * 1024
 
@@ -87,14 +85,9 @@ class ExtractConfig:
     # per-image soft deadline (Q9): reference bounds every engine call at
     # 30 s (config/index.ts:24, asyncio.wait_for at aligner.py:173-180)
     kernel_timeout_s: float = KERNEL_TIMEOUT_S
-    salt_buckets: int = COST_SALT_BUCKETS
     run_id: str = "run-0"
     # checkpoint table path (parquet dir locally, Iceberg table on cluster)
     checkpoint_path: str | None = None
-    # read blob bytes directly in python workers from (file, row_group)
-    # splits (bytes never enter the JVM); falls back to the Arrow path
-    # when the media frame is not a plain parquet scan
-    direct_blob_read: bool = True
     attempts: tuple[tuple[str, str], ...] = field(default=CASCADE_ATTEMPTS)
 
     def __post_init__(self) -> None:

@@ -19,6 +19,9 @@ from . import load, md5_bucket, md5_bucket_sql, widen
 
 N_MINHASHES = 4
 CHAR_SHINGLE = 5
+MAX_SHINGLE_BUCKET = 64  # frequent-shingle cap: drop posting lists above this
+LSH_RECALL_THRESHOLDS = (0.2, 0.5, 0.8)
+LSH_RECALL_MAX_BUCKET = 512  # candidate-bucket cap (pair blow-up guard)
 
 
 # --- exact dedup ---------------------------------------------------------------
@@ -86,18 +89,56 @@ GROUP BY doc_id
 """
 
 
-def q_minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band the 4-hash signature into 2 bands of 2; histogram bucket sizes.
-    Bucket sizes > 1 are the near-dup candidate sets."""
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = sig.select(
+def _lsh_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket): the 4-hash signature banded into 2 bands
+    of 2 rows, each band hashed to one bucket."""
+    return sig.select(
         "doc_id",
         F.md5(F.concat_ws("|", "m0", "m1")).alias("b0"),
         F.md5(F.concat_ws("|", "m2", "m3")).alias("b1"),
+    ).selectExpr("doc_id", "stack(2, 0, b0, 1, b1) as (band, bucket)")
+
+
+def _posting_pairs(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """(d1, d2) doc pairs, d1 < d2, inside every posting list of
+    ``rows`` (doc_id plus ``keys``) that holds 2..cap docs. Lists above
+    ``cap`` are dropped — the pair blow-up guard, an uncapped list of B
+    docs emits B²/2 pairs. One shuffle on ``keys``; pairs are emitted
+    row-locally from the sorted list, once per list they share."""
+    posting = (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+        .filter((F.size("ds") > 1) & (F.size("ds") <= cap))
     )
-    stacked = bands.selectExpr("stack(2, 0, b0, 1, b1) as (band, bucket)")
+    return posting.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ds, (x, i) -> transform("
+                "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
+            )
+        ).alias("p")
+    ).select("p.d1", "p.d2")
+
+
+def _lsh_candidate_pairs(
+    spark: SparkSession, sf_dir: str, cap: int = LSH_RECALL_MAX_BUCKET
+) -> DataFrame:
+    """Distinct near-dup candidate pairs (d1 < d2): docs sharing a
+    MinHash-LSH (band, bucket) whose posting list holds at most ``cap``
+    docs. The edge table of the graph family — PageRank, LPA and the
+    triangle census at cap LSH_RECALL_MAX_BUCKET (_ORACLE_LSH_CAND_CTES),
+    connected components at cap MAX_SHINGLE_BUCKET (_CC_WALK_SQL) — and
+    the candidate side of the recall panel."""
+    bands = _lsh_bands(q_minhash_signatures(spark, sf_dir))
+    return _posting_pairs(bands, ["band", "bucket"], cap).distinct()
+
+
+def q_minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Band the 4-hash signature into 2 bands of 2; histogram bucket sizes.
+    Bucket sizes > 1 are the near-dup candidate sets."""
     return (
-        stacked.groupBy("band", "bucket")
+        _lsh_bands(q_minhash_signatures(spark, sf_dir))
+        .groupBy("band", "bucket")
         .agg(F.count("*").alias("bucket_size"))
         .groupBy("band", "bucket_size")
         .agg(F.count("*").alias("n_buckets"))
@@ -122,10 +163,6 @@ SELECT band, bucket_size, count(*) AS n_buckets FROM sizes GROUP BY 1, 2
 # S-curve alone — measure what the bands actually capture on this
 # corpus (Broder 1997 resemblance sketch; Leskovec/Rajaraman/Ullman
 # ch.3 banding analysis).
-LSH_RECALL_THRESHOLDS = (0.2, 0.5, 0.8)
-LSH_RECALL_MAX_BUCKET = 512  # candidate-bucket cap (pair blow-up guard)
-
-
 def q_minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured precision/recall of the 2-band × 2-row MinHash blocking
     against TRUE char-shingle Jaccard, per similarity threshold: ground
@@ -160,47 +197,16 @@ def q_minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash signatures sketch
     ex = _shingles_df(spark, sf_dir)
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    buckets = (
-        ex.groupBy("sh")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= MAX_SHINGLE_BUCKET))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) -> transform("
-                "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
-            )
-        ).alias("p")
-    ).select("p.d1", "p.d2")
+    pairs = _posting_pairs(ex, ["sh"], MAX_SHINGLE_BUCKET)
     common = pairs.groupBy("d1", "d2").agg(F.count("*").alias("c"))
     jac = (
         common.join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("sz", "sz1"), "d1")
         .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("sz", "sz2"), "d2")
         .select("d1", "d2", (F.col("c") / (F.col("sz1") + F.col("sz2") - F.col("c"))).alias("jaccard"))
     )
-    # candidates: pairs sharing >=1 of the 2 LSH bands
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.md5(F.concat_ws("|", "m0", "m1")).alias("b0"),
-        F.md5(F.concat_ws("|", "m2", "m3")).alias("b1"),
-    ).selectExpr("doc_id", "stack(2, 0, b0, 1, b1) as (band, bucket)")
-    cand = (
-        bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= LSH_RECALL_MAX_BUCKET))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> transform("
-                    "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()  # a pair may collide in both bands
-    )
+    # candidates: pairs sharing >=1 of the 2 LSH bands (distinct: a
+    # pair may collide in both bands)
+    cand = _lsh_candidate_pairs(spark, sf_dir, LSH_RECALL_MAX_BUCKET)
     scored = cand.withColumn("is_cand", F.lit(1)).join(jac, ["d1", "d2"], "full").select(
         F.coalesce("is_cand", F.lit(0)).alias("is_cand"),
         F.coalesce("jaccard", F.lit(0.0)).alias("jaccard"),
@@ -357,9 +363,6 @@ SELECT simhash, count(*) AS n_docs FROM hashes GROUP BY simhash
 
 # --- n-gram Jaccard ---------------------------------------------------------------
 
-MAX_SHINGLE_BUCKET = 64  # frequent-shingle cap: drop posting lists above this
-
-
 def _trigram_jaccard_pairs(docs: DataFrame, min_jaccard: float) -> DataFrame:
     """Verified word-trigram Jaccard pairs (d1 < d2, jaccard ≥ threshold)
     via group-by-shingle pair generation — the shared candidate engine
@@ -383,22 +386,7 @@ def _trigram_jaccard_pairs(docs: DataFrame, min_jaccard: float) -> DataFrame:
     # explode_outer: see _shingles_df — keeps the inferred size(..)>0 filter
     # from being pushed below the exchange (gs is non-empty by construction)
     ex = with_tri.select("doc_id", "lang", F.explode_outer("gs").alias("g"))
-    buckets = (
-        ex.groupBy("lang", "g")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter(
-            (F.size("ds") > 1) & (F.size("ds") <= MAX_SHINGLE_BUCKET)
-        )
-    )
-    # all ordered pairs within a posting list (d1 < d2 via the sort above)
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) -> transform("
-                "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
-            )
-        ).alias("p")
-    ).select("p.d1", "p.d2")
+    pairs = _posting_pairs(ex, ["lang", "g"], MAX_SHINGLE_BUCKET)
     common = pairs.groupBy("d1", "d2").agg(F.count("*").alias("c"))
     return (
         common.join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("sz", "sz1"), "d1")
@@ -608,37 +596,6 @@ SELECT bucket, count(*) AS n_neardup_pairs FROM pairs WHERE cos >= 0.3 GROUP BY 
 CC_MAX_ITERS = 30  # bound >> expected diameter of capped-bucket graphs
 
 
-def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate near-dup edges: doc pairs sharing a MinHash-LSH band
-    bucket (capped like the Jaccard posting lists). Ordered d1 < d2."""
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.md5(F.concat_ws("|", "m0", "m1")).alias("b0"),
-        F.md5(F.concat_ws("|", "m2", "m3")).alias("b1"),
-    )
-    stacked = bands.select(
-        "doc_id", F.explode(F.array("b0", "b1")).alias("bucket")
-    )
-    posting = (
-        stacked.groupBy("bucket")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= MAX_SHINGLE_BUCKET))
-    )
-    return (
-        posting.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> transform("
-                    "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
-
-
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, label) connected-component fixpoint over the LSH
     candidate-pair graph via iterative hash-to-min label propagation —
@@ -649,7 +606,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB, unlike any per-component collect. The returned frame is
     localCheckpointed (materialized, no lineage into the edge frames,
     which are unpersisted before returning)."""
-    edges = _lsh_edges(spark, sf_dir).persist()
+    edges = _lsh_candidate_pairs(spark, sf_dir, MAX_SHINGLE_BUCKET).persist()
     # symmetric closure once; labels start as the node id
     sym = edges.union(
         edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
@@ -1221,34 +1178,6 @@ PR_TELEPORT = 1.0 - PR_DAMPING
 PR_ITERS = 2
 PR_TOP = 16
 PR_ROUND = 9
-
-
-def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct near-dup candidate pairs (d1 < d2) from the capped
-    2-band MinHash blocking — the shared edge table of the graph family
-    (PageRank authority, LPA communities, triangle census). Mirrors
-    _ORACLE_LSH_CAND_CTES exactly."""
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        F.md5(F.concat_ws("|", "m0", "m1")).alias("b0"),
-        F.md5(F.concat_ws("|", "m2", "m3")).alias("b1"),
-    ).selectExpr("doc_id", "stack(2, 0, b0, 1, b1) as (band, bucket)")
-    return (
-        bands.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= LSH_RECALL_MAX_BUCKET))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> transform("
-                    "slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS d1, y AS d2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.d1", "p.d2")
-        .distinct()
-    )
 
 
 def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

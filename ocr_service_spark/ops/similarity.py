@@ -211,67 +211,51 @@ def _ivf_cells_declarative(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "v", "cid")
 
 
-# per-(session, sf_dir) caches: the coarse-quantizer "model" (the K
-# centroid vectors, driver-side numpy) and the persisted cell-assignment
-# DataFrame — cells histogram + probe share one assignment scan, and
-# repeated probes pay zero extra jobs for model building.
-# Keys carry the dataset fingerprint; _cache_put evicts (and unpersists)
-# any prior entry for the same (appId, sf_dir) so a regenerated table or
-# a dataset-sweep driver (bench_scaling, shuffle_audit) can never pin an
+# Stage memo: one entry per (appId, sf_dir, embeddings fingerprint,
+# stage) — the coarse-quantizer and PQ models (driver-side numpy), the
+# IVF cell-assignment plan and the persisted recall-panel frames. Cells
+# histogram + probe share one assignment scan, and repeated probes pay
+# zero extra jobs for model building. The fingerprint (size+mtime, same
+# rule as streaming's stage_fingerprint) means a regenerated table at
+# the same path never serves stale state, and storing under a new
+# fingerprint evicts (and unpersists) every entry of the old one, so a
+# dataset-sweep driver (bench_scaling, shuffle_audit) can never pin an
 # unbounded chain of stale O(NQ·n) persisted frames in executor storage.
-_IVF_MODEL_CACHE: dict[tuple, tuple] = {}
-_CELLS_CACHE: dict[tuple, DataFrame] = {}
-_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
-_PQ_RECALL_CACHE: dict[tuple, DataFrame] = {}
-_RECALL_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-_ALL_CACHES = (
-    _IVF_MODEL_CACHE,
-    _CELLS_CACHE,
-    _PQ_MODEL_CACHE,
-    _PQ_RECALL_CACHE,
-    _RECALL_PAIRS_CACHE,
-)
+_STAGE_MEMO: dict[tuple, object] = {}
 
 
-def _cache_put(cache: dict, key: tuple, value) -> None:
-    """Insert under `key`, evicting every entry with the same
-    (appId, sf_dir) prefix but a different fingerprint; evicted
-    DataFrames are unpersisted (blocking=False)."""
-    for old in [k for k in cache if k[:2] == key[:2] and k != key]:
-        stale = cache.pop(old)
-        if isinstance(stale, DataFrame):
-            try:
-                stale.unpersist()
-            except Exception:  # session already stopped — nothing pinned
-                pass
-    cache[key] = value
+def _unpersist(value) -> None:
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:  # session already stopped — nothing pinned
+            pass
+
+
+def _memo(spark: SparkSession, sf_dir: str, stage: str, build):
+    """The memoised value of ``stage`` for this session and dataset,
+    built by calling ``build()`` on first use."""
+    from . import table_path
+    from .streaming import stage_fingerprint
+
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        stage_fingerprint(table_path(sf_dir, "embeddings")),
+        stage,
+    )
+    if key not in _STAGE_MEMO:
+        for old in [k for k in _STAGE_MEMO if k[:2] == key[:2] and k[2] != key[2]]:
+            _unpersist(_STAGE_MEMO.pop(old))
+        _STAGE_MEMO[key] = build()
+    return _STAGE_MEMO[key]
 
 
 def clear_similarity_caches() -> None:
     """Explicit hook for dataset-sweep drivers: unpersist and drop every
-    cached model/frame across all (appId, sf_dir) keys."""
-    for cache in _ALL_CACHES:
-        for key in list(cache):
-            stale = cache.pop(key)
-            if isinstance(stale, DataFrame):
-                try:
-                    stale.unpersist()
-                except Exception:
-                    pass
-
-
-def _ivf_cache_key(spark: SparkSession, sf_dir: str) -> tuple:
-    """Cache key carrying the embeddings file's content fingerprint
-    (size+mtime, same rule as streaming's stage_fingerprint), so a
-    regenerated table at the same path never serves stale centroids."""
-    from . import table_path
-    from .streaming import stage_fingerprint
-
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        stage_fingerprint(table_path(sf_dir, "embeddings")),
-    )
+    memoised model/frame across all (appId, sf_dir) keys."""
+    while _STAGE_MEMO:
+        _unpersist(_STAGE_MEMO.popitem()[1])
 
 
 def _ivf_model(spark: SparkSession, sf_dir: str):
@@ -285,9 +269,7 @@ def _ivf_model(spark: SparkSession, sf_dir: str):
 
     from . import table_path
 
-    key = _ivf_cache_key(spark, sf_dir)
-    m = _IVF_MODEL_CACHE.get(key)
-    if m is None:
+    def build():
         path = table_path(sf_dir, "embeddings")
         k = _ivf_k(pq.ParquetFile(path).metadata.num_rows)
         tbl = pq.read_table(
@@ -298,9 +280,9 @@ def _ivf_model(spark: SparkSession, sf_dir: str):
             [np.asarray(v, dtype=np.float64) for v in tbl["embedding"].to_pylist()]
         )
         cent_norm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-        m = (k, cent_mat, cent_ids, cent_norm)
-        _cache_put(_IVF_MODEL_CACHE, key, m)
-    return m
+        return k, cent_mat, cent_ids, cent_norm
+
+    return _memo(spark, sf_dir, "ivf_model", build)
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,12 +328,7 @@ def _ivf_cells_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy-plan cache: repeated calls reuse one resolved DataFrame
     (plan resolution + UDF registration cost ~0.5 s per rebuild). The
     cells query additionally persists it (build-once / probe-many)."""
-    key = _ivf_cache_key(spark, sf_dir)
-    df = _CELLS_CACHE.get(key)
-    if df is None:
-        df = _ivf_cells(spark, sf_dir)
-        _cache_put(_CELLS_CACHE, key, df)
-    return df
+    return _memo(spark, sf_dir, "ivf_cells", lambda: _ivf_cells(spark, sf_dir))
 
 
 def q_ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,8 +603,7 @@ GROUP BY a2.cid
 
 
 # --- ANN recall measurement ------------------------------------------------
-ANN_RECALL_NQ = 16  # sampled query panel size (_RECALL_PAIRS_CACHE is
-                    # declared with the other caches above)
+ANN_RECALL_NQ = 16  # sampled query panel size
 
 
 def _two_level_topk(
@@ -728,15 +704,10 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # four arms rank this frame; without the persist each arm re-scans,
     # re-crossjoins, and re-scores (the arm filters sit below the window
-    # exchanges, so Spark cannot reuse them). Cached per (session,
+    # exchanges, so Spark cannot reuse them). Memoised per (session,
     # dataset) like the IVF cell assignment so repeat panel runs reuse
     # ONE persisted frame instead of leaking a new cache entry per call.
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _RECALL_PAIRS_CACHE.get(key)
-    if cached is None:
-        cached = pairs.persist()
-        _cache_put(_RECALL_PAIRS_CACHE, key, cached)
-    pairs = cached
+    pairs = _memo(spark, sf_dir, "recall_pairs", pairs.persist)
     # one shared two-level ranking definition for all arms (see
     # _two_level_topk)
     exact = _two_level_topk(pairs, F.desc("cos"))
@@ -839,14 +810,14 @@ def _pq_model(spark: SparkSession, sf_dir: str):
     the same deterministic seeding rule as the IVF coarse quantizer and
     k-means, so the oracle can re-derive the codebook in SQL. Returns
     (k, codebooks[M][k][sub_d]) as float64 numpy."""
+    return _memo(spark, sf_dir, "pq_model", lambda: _build_pq_model(sf_dir))
+
+
+def _build_pq_model(sf_dir: str):
     import pyarrow.parquet as pq
 
     from . import table_path
 
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _PQ_MODEL_CACHE.get(key)
-    if cached is not None:
-        return cached
     path = table_path(sf_dir, "embeddings")
     n = pq.ParquetFile(path).metadata.num_rows
     k = min(PQ_K, n)
@@ -870,7 +841,6 @@ def _pq_model(spark: SparkSession, sf_dir: str):
         raise ValueError(f"embedding dim {d} not divisible by PQ_M={PQ_M}")
     sub = d // PQ_M
     books = seeds.reshape(k, PQ_M, sub).transpose(1, 0, 2)  # (M, k, sub)
-    _cache_put(_PQ_MODEL_CACHE, key, (k, books))
     return k, books
 
 
@@ -984,11 +954,11 @@ def _pq_panel_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra pandas-UDF column over the same vector batch, no extra scan).
     Persisted once per (session, dataset) — q_pq_recall and
     q_ann_ivfpq_multiprobe share it, and repeat panel runs must not leak
-    cache entries (same eviction policy as _RECALL_PAIRS_CACHE)."""
-    key = _ivf_cache_key(spark, sf_dir)
-    cached = _PQ_RECALL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    memo entries (_memo)."""
+    return _memo(spark, sf_dir, "pq_panel", lambda: _build_pq_panel(spark, sf_dir))
+
+
+def _build_pq_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, books = _pq_model(spark, sf_dir)
     nq = min(PQ_NQ, k)
     # per-query ADC LUTs in integer micro-units (queries are the seeds;
@@ -1022,15 +992,13 @@ def _pq_panel_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         PQ_ROUND,
     )
-    scored = pairs.select(
+    return pairs.select(
         "qid",
         "vec_id",
         "cid",
         adc.alias("adc"),
         F.round(exd * 1_000_000).cast("long").alias("exact_d"),
     ).persist()
-    _cache_put(_PQ_RECALL_CACHE, key, scored)
-    return scored
 
 
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

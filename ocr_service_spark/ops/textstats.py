@@ -1454,7 +1454,7 @@ CPIPE_PPM = 1_000_000
 
 
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import CHAR_SHINGLE, N_MINHASHES
+    from .dedup import CHAR_SHINGLE, N_MINHASHES, _lsh_bands
 
     docs = load(spark, sf_dir, "documents")
     tokens = F.split(F.col("text"), " ")
@@ -1518,11 +1518,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     )
-    stacked = sig.select(
-        "doc_id",
-        F.md5(F.concat_ws("|", "m0", "m1")).alias("b0"),
-        F.md5(F.concat_ws("|", "m2", "m3")).alias("b1"),
-    ).selectExpr("doc_id", "stack(2, 0, b0, 1, b1) as (band, bucket)")
+    stacked = _lsh_bands(sig)
     w_bucket = W.partitionBy("band", "bucket")
     dropped3 = (
         stacked.withColumn("mn", F.min("doc_id").over(w_bucket))

@@ -33,9 +33,6 @@ from ..kernels.pdf import reconstruct_reading_order
 from ..kernels.text import normalize_text
 from .salting import cost_partition_count
 
-# per-span branch-result schema (both branches union into this)
-_BRANCH_COLS = ["doc_id", "order", "kind", "text", "media_ref"]
-
 # media extraction output: one row per BLOB (not per span) + a per-scan-
 # partition metrics sideband row
 # span rows double as the recognition_results-analog detail record
@@ -158,7 +155,11 @@ def _append_detail(details: dict, res: dict, ms: float, attempt: int) -> None:
     details["attempt_number"].append(attempt)
 
 
-def _make_media_fn(cfg: ExtractConfig):
+def _media_kernel(cfg: ExtractConfig, rows):
+    """The mapInPandas function of the media branch: runs
+    extract_media_span over every blob the row source ``rows`` yields
+    as (media_refs, blobs) batches, emits one span row per blob with its
+    recognition detail, then one metrics sideband row per partition."""
     conf_low = cfg.confidence_low
     accepted = cfg.accepted_qr_formats
     aggressive = cfg.aggressive
@@ -175,10 +176,10 @@ def _make_media_fn(cfg: ExtractConfig):
         n_blobs = 0
         ocr_chars = 0
         kernel_ms: list[float] = []
-        for pdf in batches:
+        for refs, blobs in rows(batches):
             texts, kinds = [], []
             details = {k: [] for k in _DETAIL_KEYS}
-            for blob in pdf["content"]:
+            for blob in blobs:
                 t0 = time.perf_counter()
                 res = extract_media_span(
                     bytes(blob) if blob is not None else None,
@@ -195,10 +196,10 @@ def _make_media_fn(cfg: ExtractConfig):
                 texts.append(res.get("text"))
                 _append_detail(details, res, ms, attempt)
                 ocr_chars += len(res.get("text") or "")
-            n_blobs += len(pdf)
+            n_blobs += len(kinds)
             yield pd.DataFrame(
                 {
-                    "media_ref": pdf["media_ref"],
+                    "media_ref": list(refs),
                     "kind": kinds,
                     "text": texts,
                     "row_type": "span",
@@ -235,40 +236,32 @@ def _make_media_fn(cfg: ExtractConfig):
     return media_fn
 
 
-def _make_direct_media_fn(cfg: ExtractConfig):
-    """Like _make_media_fn, but rows are (path, row_group) parquet splits:
-    the python worker reads blob bytes itself (pyarrow C++, GIL-released)
-    so they never pass through the JVM heap. With the Arrow-transfer path,
-    2 GiB of blobs allocated through the JVM caused ~300 s of summed GC in
-    one stage at 32 tasks; direct reads eliminate that entirely. At
-    cluster scale the same code reads object-store URIs (pyarrow/fsspec) —
-    the standard layout for binary-heavy inference pipelines."""
-    conf_low = cfg.confidence_low
-    accepted = cfg.accepted_qr_formats
-    aggressive = cfg.aggressive
-    timeout_s = cfg.kernel_timeout_s
-    warp_interp = cfg.warp_interp
-    alignment_mode = cfg.alignment_mode
+def _arrow_rows(batches: Iterator[pd.DataFrame]):
+    """Row source over (media_ref, content) Arrow batches: honors the
+    caller's full logical plan (in-memory, filtered, projected or
+    streaming media frames)."""
+    for pdf in batches:
+        yield pdf["media_ref"], pdf["content"]
 
-    def media_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx else -1
-        attempt = (ctx.attemptNumber() + 1) if ctx else 1
-        n_blobs = 0
-        ocr_chars = 0
-        kernel_ms: list[float] = []
-        for pdf in batches:
-            work = [
-                (p, int(rg), int(lo), int(hi))
-                for paths, rgs, los, his in zip(
-                    pdf["paths"], pdf["row_groups"], pdf["row_los"], pdf["row_his"]
-                )
-                for p, rg, lo, hi in zip(paths, rgs, los, his)
-            ]
-            for path, rg, row_lo, row_hi in work:
+def _atom_rows(batches: Iterator[pd.DataFrame]):
+    """Row source over (paths, row_groups, row_los, row_his) bins of
+    packing atoms (_lpt_pack): the python worker reads blob bytes itself
+    (pyarrow C++, GIL-released) so they never pass through the JVM heap.
+    With the Arrow-transfer path, 2 GiB of blobs allocated through the
+    JVM caused ~300 s of summed GC in one stage at 32 tasks; direct
+    reads eliminate that entirely. At cluster scale the same code reads
+    object-store URIs (pyarrow/fsspec) — the standard layout for
+    binary-heavy inference pipelines."""
+    import pyarrow.parquet as pq
+
+    for pdf in batches:
+        for paths, rgs, los, his in zip(
+            pdf["paths"], pdf["row_groups"], pdf["row_los"], pdf["row_his"]
+        ):
+            for path, rg, row_lo, row_hi in zip(
+                paths, map(int, rgs), map(int, los), map(int, his)
+            ):
                 # stream the row group in bounded batches instead of
                 # materializing it whole: datagen writes 16-row groups,
                 # but an externally-written table with default-sized row
@@ -290,63 +283,10 @@ def _make_direct_media_fn(cfg: ExtractConfig):
                             break
                         continue
                     tbl = tbl.slice(b_lo, b_hi - b_lo)
-                    refs = tbl.column("media_ref").to_pylist()
-                    blobs = tbl.column("content").to_pylist()
-                    texts, kinds = [], []
-                    details = {k: [] for k in _DETAIL_KEYS}
-                    for blob in blobs:
-                        t0 = time.perf_counter()
-                        res = extract_media_span(
-                            bytes(blob) if blob is not None else None,
-                            conf_low,
-                            accepted,
-                            aggressive=aggressive,
-                            timeout_s=timeout_s,
-                            warp_interp=warp_interp,
-                            alignment_mode=alignment_mode,
-                        )
-                        ms = (time.perf_counter() - t0) * 1000.0
-                        kernel_ms.append(ms)
-                        kinds.append(
-                            res["kind"] if res["status"] == "completed" else "media_text"
-                        )
-                        texts.append(res.get("text"))
-                        _append_detail(details, res, ms, attempt)
-                        ocr_chars += len(res.get("text") or "")
-                    n_blobs += len(refs)
-                    yield pd.DataFrame(
-                        {
-                            "media_ref": refs,
-                            "kind": kinds,
-                            "text": texts,
-                            "row_type": "span",
-                            "part_id": part_id,
-                            "n_blobs": None,
-                            "ocr_chars": None,
-                            "kernel_ms_p50": None,
-                            "kernel_ms_max": None,
-                            "kernel_ms_sum": None,
-                            **details,
-                        }
+                    yield (
+                        tbl.column("media_ref").to_pylist(),
+                        tbl.column("content").to_pylist(),
                     )
-        ms = sorted(kernel_ms)
-        yield pd.DataFrame(
-            {
-                "media_ref": [None],
-                "kind": [None],
-                "text": [None],
-                "row_type": ["metrics"],
-                "part_id": [part_id],
-                "n_blobs": [n_blobs],
-                "ocr_chars": [ocr_chars],
-                "kernel_ms_p50": [ms[len(ms) // 2] if ms else None],
-                "kernel_ms_max": [ms[-1] if ms else None],
-                "kernel_ms_sum": [round(sum(ms), 3) if ms else None],
-                **{k: [None] for k in _DETAIL_KEYS},
-            }
-        )
-
-    return media_fn
 
 
 # estimated decode cost model for a media split (ms): model inference is a
@@ -358,13 +298,9 @@ COST_MS_PER_ROW = 90.0
 COST_MS_PER_MB = 15.0
 # target estimated cost per bin: small enough that the final wave's
 # quantization error is a few percent of stage wall, large enough that
-# per-task overhead (~10 ms) stays negligible. Env-overridable so the
-# wave geometry can be tuned per deployment (more, smaller bins =
-# better LPT smoothing at high parallelism; fewer = less per-atom page
-# re-decode) without a code change.
-TARGET_COST_MS_PER_BIN = float(
-    os.environ.get("SPARK_GRAFT_BIN_TARGET_MS", "5000")
-)
+# per-task overhead (~10 ms) stays negligible (PLANS.md round 5: 2500
+# loses ~15% to per-atom page re-decode, 7500 is a wash).
+TARGET_COST_MS_PER_BIN = 5000.0
 
 
 def _split_cost_ms(rows: int, nbytes: int) -> float:
@@ -593,8 +529,9 @@ def release_persisted() -> None:
 
 def _media_branch(
     spans: DataFrame, media: DataFrame, cfg: ExtractConfig
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (per-span branch rows, per-partition metrics).
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Returns (per-span branch rows, per-partition metrics, per-blob
+    recognition details).
 
     Scale shape — blob bytes never cross the wire. Measured here: at 2 GiB
     of blobs a join-then-extract plan was shuffle-IO-bound and got SLOWER
@@ -620,12 +557,18 @@ def _media_branch(
     join). At production scale the media table is partitioned by the same
     bucket key as documents (Iceberg partition transform), so a resume
     lists only the matching data files and this is moot.
+
+    Row source: the python-direct atom reader (_atom_rows) when the media
+    frame is a bare parquet scan with splits (_direct_read_splits) and the
+    span side is a batch frame; Arrow batches (_arrow_rows) otherwise —
+    a streaming plan must stay declarative, and any other media frame
+    (in-memory, filtered, projected) keeps its full logical plan.
     """
     media_spans = spans.filter(F.col("kind") == "media").select(
         "doc_id", "order", "media_ref"
     )
     spark = media.sparkSession
-    splits = _direct_read_splits(media) if cfg.direct_blob_read else None
+    splits = None if spans.isStreaming else _direct_read_splits(media)
     if splits is not None:
         # python-direct read: distribute (file, row_group) splits by
         # ESTIMATED COST (fixed inference cost per row + streaming cost
@@ -663,11 +606,11 @@ def _media_branch(
             "row_los array<int>, row_his array<int>",
         )
         results = pairs.mapInPandas(
-            _make_direct_media_fn(cfg), schema=_MEDIA_RESULT_SCHEMA
+            _media_kernel(cfg, _atom_rows), schema=_MEDIA_RESULT_SCHEMA
         )
     else:
-        # generic fallback (in-memory, filtered, or non-parquet media):
-        # Arrow path, which honors the caller's full logical plan
+        # Arrow source (streaming spans; in-memory, filtered, projected
+        # or non-parquet media): honors the caller's full logical plan
         from ..ops import estimated_scan_partitions
 
         blobs = media.select("media_ref", "content")
@@ -676,7 +619,9 @@ def _media_branch(
             est = blobs.rdd.getNumPartitions()  # in-memory frames only
         if est < spark.sparkContext.defaultParallelism:
             blobs = blobs.repartition(cost_partition_count(media), F.col("media_ref"))
-        results = blobs.mapInPandas(_make_media_fn(cfg), schema=_MEDIA_RESULT_SCHEMA)
+        results = blobs.mapInPandas(
+            _media_kernel(cfg, _arrow_rows), schema=_MEDIA_RESULT_SCHEMA
+        )
     # persist the NARROW results so the metrics action does not re-run OCR
     # (text-sized cache; blob bytes are not retained). Registered so
     # long-lived sessions (bench.py runs many queries) can release the

@@ -10,9 +10,9 @@ by estimated decode cost":
    binarize are all ~linear in pixels ≈ bytes for raw-gray blobs);
 2. pick the partition count from total cost / TARGET_BYTES_PER_TASK so a
    task's expected cost is bounded regardless of scale factor;
-3. salt rows uniformly (xxhash64 of media_ref — stable, key-independent)
-   so heavy blobs scatter instead of hashing to the partition of their
-   parent doc.
+3. salt rows uniformly (the Arrow source of the media branch hash-
+   partitions by media_ref — stable, key-independent) so heavy blobs
+   scatter instead of hashing to the partition of their parent doc.
 
 AQE (skewJoin + coalescePartitions) stays on as the runtime backstop.
 """
@@ -22,20 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import TARGET_BYTES_PER_TASK
-
-
-def cost_partition_count_from_bytes(
-    total_bytes: int,
-    spark,
-    min_partitions: int = 8,
-    max_partitions: int = 4096,
-    target_bytes_per_task: int = TARGET_BYTES_PER_TASK,
-) -> int:
-    """cost_partition_count when total cost is already known (e.g. from
-    parquet row-group statistics) — no scan, no action."""
-    cluster_par = spark.sparkContext.defaultParallelism
-    lo = max(min_partitions, cluster_par)
-    return int(min(max_partitions, max(lo, (total_bytes // target_bytes_per_task) + 1)))
 
 
 def cost_partition_count(
@@ -53,27 +39,3 @@ def cost_partition_count(
     lo = max(min_partitions, cluster_par)
     return int(min(max_partitions, max(lo, (total // target_bytes_per_task) + 1)))
 
-
-def cost_salted_repartition(
-    media_rows: DataFrame,
-    size_col: str = "file_size",
-    salt_col: str = "media_ref",
-    min_partitions: int = 8,
-    max_partitions: int = 4096,
-    target_bytes_per_task: int = TARGET_BYTES_PER_TASK,
-) -> DataFrame:
-    """Repartition media rows so per-task decode cost is balanced.
-
-    One lightweight aggregate action (sum of an int64 column, served from
-    parquet statistics-friendly scan) sizes the stage; the repartition
-    itself is a single round-robin-by-hash shuffle.
-    """
-    total = media_rows.agg(F.sum(size_col).alias("b")).collect()[0]["b"] or 0
-    # floor at cluster parallelism: when total cost is small relative to
-    # the cluster (always true in local tests, never at 10^12 docs) the
-    # cost-derived count must not leave cores idle
-    cluster_par = media_rows.sparkSession.sparkContext.defaultParallelism
-    min_partitions = max(min_partitions, cluster_par)
-    n = int(min(max_partitions, max(min_partitions, (total // target_bytes_per_task) + 1)))
-    salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n)).alias("__salt")
-    return media_rows.repartition(n, salt)

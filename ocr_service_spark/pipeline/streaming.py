@@ -8,8 +8,9 @@ interleaved documents appear as files (or Iceberg snapshots / Kafka
 batches) and extracted span rows stream out continuously.
 
 Differences from batch, all forced by streaming semantics:
-- the media branch uses the Arrow join path (``direct_blob_read=False``):
-  the python-direct row-group reader plans against a fixed file listing,
+- the media branch reads blobs through Arrow batches: ``_media_branch``
+  takes the python-direct row-group reader only when the span side is a
+  batch frame, because that reader plans against a fixed file listing,
   which is the batch contract — the stream side must stay declarative;
 - reassembly (groupBy doc_id + collect_list) is a streaming aggregation;
   documents are assumed complete within one micro-batch (the input is an
@@ -20,8 +21,6 @@ Differences from batch, all forced by streaming semantics:
 """
 
 from __future__ import annotations
-
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,7 +41,6 @@ def run_extract_streaming(
     media — a static blob table. Returns (output, metrics) streaming/
     static DataFrames; callers attach a sink via ``output.writeStream``.
     """
-    cfg = replace(cfg or ExtractConfig(), direct_blob_read=False)
     return run_extract(spark, docs_stream, media, cfg)
 
 
@@ -106,8 +104,8 @@ def extract_stream_to_files(
     input is an append-only table of COMPLETE documents (the reference's
     one-job-per-finished-upload semantics, worker/processor.ts:8-115),
     so each micro-batch is a self-contained batch job — ordered span
-    reassembly needs no cross-batch state, the python-direct blob path
-    stays available, and nothing is ever collected to the driver (the
+    reassembly needs no cross-batch state, only the blobs the batch
+    references are extracted, and nothing is ever collected to the driver (the
     memory-sink drain in extract_stream_to_memory / ops.streaming is a
     test-and-oracle harness only).
 

@@ -1,7 +1,7 @@
-"""The media branch has two physical paths with identical semantics:
-python-direct parquet row-group reads (file-backed media) and the Arrow
-join path (any other DataFrame). This suite pins the fallback path and
-the dangling-media_ref contract on both."""
+"""The media kernel has two row sources with identical semantics:
+python-direct parquet row-group reads (a bare parquet scan of the media
+table) and Arrow batches (any other DataFrame). This suite pins the
+Arrow source and the dangling-media_ref contract on both."""
 
 from __future__ import annotations
 
@@ -113,15 +113,35 @@ def test_filtered_media_frame_honors_plan(spark, dataset):
     assert all(s[1] is None for s in hits)
 
 
-def test_direct_and_fallback_paths_agree(spark, dataset):
-    """Same dataset through both physical paths → identical span output."""
-    import os
+def _run_outputs(spark, docs, media):
+    """(span sequences, _metrics n_blobs/ocr_chars totals, recognition
+    records by media_ref without processing_ms) of one run."""
+    from pyspark.sql import functions as F
 
-    data_dir = os.path.dirname(dataset["documents"])
+    details = []
+    output, metrics = run_extract(
+        spark, docs, media, ExtractConfig(), details_out=details
+    )
+    totals = metrics.agg(F.sum("n_blobs"), F.sum("ocr_chars")).first()
+    records = {
+        r["media_ref"]: r.asDict(recursive=True)
+        for r in details[0].drop("processing_ms").collect()
+    }
+    return _collect_spans(output), tuple(totals), records
+
+
+def test_direct_and_fallback_paths_agree(spark, dataset):
+    """Same dataset through both row sources of the media kernel →
+    identical span output, metrics totals and recognition records. The
+    bare media scan takes the direct atom reader; a projection of it is
+    no bare scan, so it takes the Arrow source."""
+    from ocr_service_spark.pipeline.extract import _direct_read_splits
+
     docs = spark.read.parquet(dataset["documents"])
     media = spark.read.parquet(dataset["media"])
-    direct, _ = run_extract(spark, docs, media, ExtractConfig())
-    fallback, _ = run_extract(
-        spark, docs, media, ExtractConfig(direct_blob_read=False)
-    )
-    assert _collect_spans(direct) == _collect_spans(fallback)
+    projected = media.select("media_ref", "content", "file_size")
+    assert _direct_read_splits(media) is not None
+    assert _direct_read_splits(projected) is None
+    spans, totals, records = _run_outputs(spark, docs, media)
+    assert totals[0] == len(records) > 0
+    assert (spans, totals, records) == _run_outputs(spark, docs, projected)

@@ -119,31 +119,66 @@ def test_registry_consistency():
         )
 
 
-def test_similarity_cache_eviction(spark):
-    """_cache_put evicts (and unpersists) stale entries for the same
+def _fake_sf_dir(root, name: str, content: bytes) -> str:
+    """An sf_dir whose embeddings file only feeds the memo fingerprint
+    (size+mtime): rewriting it with another size is a regenerated table."""
+    d = root / name
+    d.mkdir(exist_ok=True)
+    (d / "embeddings.parquet").write_bytes(content)
+    return str(d)
+
+
+def test_similarity_cache_eviction(spark, tmp_path):
+    """The stage memo evicts (and unpersists) stale entries for the same
     (appId, sf_dir) when the dataset fingerprint changes, so a sweep
     over regenerated tables never pins a chain of dead persisted frames
     in executor storage (round-3 advice)."""
     from pyspark.sql import functions as F
 
-    from ocr_service_spark.ops.similarity import _cache_put
+    from ocr_service_spark.ops import similarity as sim
 
-    cache = {}
-    app = spark.sparkContext.applicationId
+    sim.clear_similarity_caches()
+    ds = _fake_sf_dir(tmp_path, "ds", b"v1")
     df_old = spark.range(4).select(F.col("id")).persist()
     df_old.count()
-    _cache_put(cache, (app, "/ds", "fp1"), df_old)
+    assert sim._memo(spark, ds, "pairs", lambda: df_old) is df_old
+    _fake_sf_dir(tmp_path, "ds", b"v2-regenerated")
     df_new = spark.range(4).select(F.col("id") * 2)
-    _cache_put(cache, (app, "/ds", "fp2"), df_new)
-    assert list(cache) == [(app, "/ds", "fp2")]
+    assert sim._memo(spark, ds, "pairs", lambda: df_new) is df_new
+    assert [(k[1], k[3]) for k in sim._STAGE_MEMO] == [(ds, "pairs")]
     assert not df_old.storageLevel.useMemory  # unpersisted on eviction
     # a different sf_dir under the same app is NOT evicted
-    other = spark.range(2)
-    _cache_put(cache, (app, "/other", "fp1"), other)
-    assert len(cache) == 2
-    # idempotent re-put under the identical key keeps the entry
-    _cache_put(cache, (app, "/ds", "fp2"), df_new)
-    assert cache[(app, "/ds", "fp2")] is df_new
+    other = _fake_sf_dir(tmp_path, "other", b"v1")
+    sim._memo(spark, other, "pairs", lambda: spark.range(2))
+    assert len(sim._STAGE_MEMO) == 2
+    # an idempotent re-put under the identical key keeps the entry and
+    # does not rebuild it
+    assert sim._memo(spark, ds, "pairs", lambda: spark.range(9)) is df_new
+    assert len(sim._STAGE_MEMO) == 2
+    sim.clear_similarity_caches()
+
+
+def test_clear_similarity_caches_unpersists_every_frame(spark, tmp_path):
+    """clear_similarity_caches() empties the memo and unpersists every
+    memoised frame, across stages and datasets — a benchmark pass that
+    calls it starts cold."""
+    from ocr_service_spark.ops import similarity as sim
+
+    sim.clear_similarity_caches()
+    frames = []
+    for name in ("a", "b"):
+        sf_dir = _fake_sf_dir(tmp_path, name, b"v1")
+        for stage in ("recall_pairs", "pq_panel"):
+            # distinct plans: Spark shares one cache entry per plan
+            df = spark.range(len(frames) + 1).persist()
+            df.count()
+            frames.append(sim._memo(spark, sf_dir, stage, lambda df=df: df))
+        sim._memo(spark, sf_dir, "ivf_model", lambda: (4, None, None, None))
+    assert len(sim._STAGE_MEMO) == 6
+    assert all(df.storageLevel.useMemory for df in frames)
+    sim.clear_similarity_caches()
+    assert sim._STAGE_MEMO == {}
+    assert not any(df.storageLevel.useMemory for df in frames)
 
 
 def test_ivf_pandas_matches_declarative(spark):
